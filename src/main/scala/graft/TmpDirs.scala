@@ -53,7 +53,12 @@ object TmpDirs {
     root
   }
 
-  private def deleteTree(root: java.nio.file.Path): Unit =
+  /** Whether `root` is registered for removal at exit. */
+  private[graft] def isRegistered(root: java.nio.file.Path): Boolean =
+    registered.contains(root)
+
+  /** Best-effort recursive delete of `root`. */
+  private[graft] def deleteTree(root: java.nio.file.Path): Unit =
     try {
       import java.nio.file.{Files, Path}
       import java.util.Comparator
@@ -63,5 +68,5 @@ object TmpDirs {
           .forEach(p => { val _ = Files.deleteIfExists(p) })
         finally walk.close()
       }
-    } catch { case _: java.io.IOException => () } // best-effort at exit
+    } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
 }

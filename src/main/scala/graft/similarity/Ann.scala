@@ -1019,8 +1019,13 @@ object Ann {
     // each assign pass re-paid the scan + rebalance exchange, and the
     // sizing count() alone paid a full scan+shuffle that a parquet
     // metadata count answers for free (guide §2.4/§1: n is identical
-    // either way — rebalanced() is a pure repartition)
-    val e = graft.CachePins.pin(embeddings(spark, dir))
+    // either way — rebalanced() is a pure repartition). The pinned
+    // frame drops `label`, so its plan is no subtree of the shared
+    // embeddings() frame: a pin of that frame would outlive this
+    // operator and rewrite every later vec_*/ann_* plan onto its
+    // InMemoryRelation.
+    val e = graft.CachePins.pin(Tables.rebalanced(Tables.embeddings(spark, dir))
+      .select(col("vec_id"), toDouble(col("embedding")).as("v")))
     val n = Tables.embeddings(spark, dir).count() // scalar: sizes k/kc/m, the only driver-side value
     val k = math.max(1, math.ceil(n / 125.0).toInt)
     val kc = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt) // coarse cells (√k: bounded broadcast)

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 import org.apache.spark.sql.types.StructType
 
+import graft.syncer.FileInventory
+
 /** One cell write flowing through the CDC change feed. */
 case class CellWrite(row_key: Long, value: Double, write_us: Long,
     generation: Long, tombstone: Boolean)
@@ -87,12 +89,10 @@ object StreamWatcher {
   def retryQueueStream(stream: org.apache.spark.sql.DataFrame): Dataset[UploadOutcome] = {
     val spark = stream.sparkSession
     import spark.implicits._
-    val nodeId = (col("user_id") % 10).cast("long")
     val attempts = stream
-      .filter(!(col("event_id") % 20 === 0))
+      .filter(!FileInventory.modelIsTemp)
       .select(
-        concat(lit("ks1/"), col("event_type"), lit("/node"), nodeId.cast("string"),
-          lit("/na-"), col("event_id").cast("string"), lit("-Data.db")).as("path"),
+        FileInventory.modelPath.as("path"),
         col("event_type").as("cf"),
         (lit(1L) + when(col("event_type") === "error", col("event_id") % 3).otherwise(0L))
           .as("requiredAttempts"))
@@ -230,12 +230,7 @@ object StreamWatcher {
       .option("checkpointLocation", ckDir.toString).queryName(name).start()
     val progress = try { q.processAllAvailable(); q.recentProgress.toSeq } finally {
       q.stop()
-      // best-effort recursive cleanup of the throwaway checkpoint
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(ckDir).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Exception => () }
+      graft.TmpDirs.deleteTree(ckDir) // the throwaway checkpoint
     }
     (replaySession.table(name), progress)
   }
@@ -424,11 +419,18 @@ object StreamWatcher {
     (purchases, clicks)
   }
 
-  def intervalJoinStream(spark: SparkSession, dir: String): DataFrame = {
+  def intervalJoinStream(spark: SparkSession, dir: String): DataFrame =
+    intervalJoin(spark, dir, "inner")
+
+  /** Every purchase joined (`joinType`) to the same user's clicks in
+    * the preceding 30 minutes, over the bucketed sides.
+    */
+  private def intervalJoin(spark: SparkSession, dir: String, joinType: String): DataFrame = {
     val (purchases, clicks) = bucketedIntervalSides(spark, dir)
     purchases.join(clicks, expr(
-      "user_id = c_user AND p_bkt = c_bkt AND " +
-        "c_ts >= p_ts - interval 30 minutes AND c_ts <= p_ts"))
+        "user_id = c_user AND p_bkt = c_bkt AND " +
+          "c_ts >= p_ts - interval 30 minutes AND c_ts <= p_ts"),
+        joinType)
       .select(col("user_id"), col("purchase_id"), col("click_id"))
   }
 
@@ -451,17 +453,11 @@ object StreamWatcher {
     * on both sides stays bounded by the watermark exactly as in the
     * inner join.
     */
-  def intervalJoinOuterStream(spark: SparkSession, dir: String): DataFrame = {
+  def intervalJoinOuterStream(spark: SparkSession, dir: String): DataFrame =
     // same time-bucketed sides as the inner form: each purchase lives
     // in exactly ONE bucket row, so an unmatched purchase still emits
     // its null row exactly once at watermark eviction
-    val (purchases, clicks) = bucketedIntervalSides(spark, dir)
-    purchases.join(clicks, expr(
-        "user_id = c_user AND p_bkt = c_bkt AND " +
-          "c_ts >= p_ts - interval 30 minutes AND c_ts <= p_ts"),
-        "left_outer")
-      .select(col("user_id"), col("purchase_id"), col("click_id"))
-  }
+    intervalJoin(spark, dir, "left_outer")
 
   /** §2.7 oracle surface: the OUTER interval join replayed on the
     * bounded source. Matched pairs equal the batch join; the null
@@ -559,8 +555,7 @@ object StreamWatcher {
           // widely spaced mtimes pin the file-source processing order
           dest.toFile.setLastModified(60000L * (i + 1))
         }
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        graft.TmpDirs.deleteTree(tmp)
       }
     }
     base.toString
@@ -759,17 +754,13 @@ object StreamWatcher {
     * inventory entries — the continuous version of
     * `SyncOps.syncDiffUpload`'s source side.
     */
-  def uploadPlanStream(stream: DataFrame): DataFrame = {
-    val nodeId = (col("user_id") % 10).cast("long")
-    val isTemp = col("event_id") % 20 === 0
+  def uploadPlanStream(stream: DataFrame): DataFrame =
     stream
-      .filter(!isTemp)
+      .filter(!FileInventory.modelIsTemp)
       .select(
         col("event_type").as("cf"),
-        nodeId.as("node_id"),
+        FileInventory.modelNodeId.as("node_id"),
         col("event_id").as("generation"),
-        concat(lit("ks1/"), col("event_type"), lit("/node"), nodeId.cast("string"),
-          lit("/na-"), col("event_id").cast("string"), lit("-Data.db")).as("path"),
+        FileInventory.modelPath.as("path"),
         col("ts").as("mtime"))
-  }
 }

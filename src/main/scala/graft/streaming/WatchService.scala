@@ -1,12 +1,13 @@
 package graft.streaming
 
 import graft.Ckpt.CutOps
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.syncer.Target
+import graft.syncer.{SsTablePath, Target}
 
 /** The long-running watch daemon — the reference's `main()` loop
   * (`/root/reference/bin/cassandra-syncer:258-276`: initial backup,
@@ -69,7 +70,39 @@ object WatchService {
 
   /** `Watcher.isTempFile` as a stream filter. */
   def durableArrivals(stream: DataFrame): DataFrame =
-    stream.filter(!col("path").endsWith("-tmp-Data.db"))
+    stream.filter(!SsTablePath.isTemp(col("path")))
+
+  /** The object key of `abs`: its path below the first watch root that
+    * contains it (roots absolute, without a trailing slash).
+    */
+  private def relativeKey(rootsAbs: Seq[String], abs: String): String =
+    rootsAbs.collectFirst {
+      case r if abs.startsWith(r + "/") => abs.stripPrefix(r + "/")
+    }.getOrElse(abs.stripPrefix("/"))
+
+  /** Stream `src` once in 64 KiB reads: copied to `copyTo` when given
+    * (overwritten), MD5-hashed when `hash`. Returns the hex digest, or
+    * null without `hash`. Both streams close in `finally`; open and
+    * read errors (`FileNotFoundException`, `ChecksumException`) reach
+    * the caller, which owns the verdict.
+    */
+  private def streamFile(conf: Configuration, src: Path, copyTo: Option[Path],
+      hash: Boolean): String = {
+    val md = if (hash) Some(java.security.MessageDigest.getInstance("MD5")) else None
+    val in = src.getFileSystem(conf).open(src)
+    try {
+      val out = copyTo.map(d => d.getFileSystem(conf).create(d, true))
+      try {
+        val buf = new Array[Byte](64 * 1024)
+        var n = in.read(buf)
+        while (n >= 0) {
+          md.foreach(_.update(buf, 0, n)); out.foreach(_.write(buf, 0, n))
+          n = in.read(buf)
+        }
+      } finally out.foreach(_.close())
+    } finally in.close()
+    md.map(_.digest().map("%02x".format(_)).mkString).orNull
+  }
 
   /** One micro-batch of the upload loop: copy every discovered file
     * to `<objects>/<path relative to its watch root>` on executors,
@@ -89,33 +122,15 @@ object WatchService {
       .mapPartitions { it =>
         // Configuration is not serializable; rebuild per task like
         // any Hadoop-backed scan does
-        val conf = new org.apache.hadoop.conf.Configuration()
+        val conf = new Configuration()
         it.map { case (src, len) =>
           val srcPath = new Path(src)
-          val abs = srcPath.toUri.getPath
-          val rel = rootsAbs.collectFirst {
-            case r if abs.startsWith(r + "/") => abs.stripPrefix(r + "/")
-          }.getOrElse(abs.stripPrefix("/"))
-          val dst = new Path(objectsPath, rel)
+          val rel = relativeKey(rootsAbs, srcPath.toUri.getPath)
           try {
-            val sfs = srcPath.getFileSystem(conf)
-            val dfs = dst.getFileSystem(conf)
             // hash WHILE copying — the bytes are streaming through
             // anyway, so the content digest the manifest needs for
             // post-upload fsck costs no extra read
-            val md = java.security.MessageDigest.getInstance("MD5")
-            val in = sfs.open(srcPath)
-            try {
-              val out = dfs.create(dst, true)
-              try {
-                val buf = new Array[Byte](64 * 1024)
-                var n = in.read(buf)
-                while (n >= 0) {
-                  md.update(buf, 0, n); out.write(buf, 0, n); n = in.read(buf)
-                }
-              } finally out.close()
-            } finally in.close()
-            val hex = md.digest().map("%02x".format(_)).mkString
+            val hex = streamFile(conf, srcPath, Some(new Path(objectsPath, rel)), hash = true)
             (rel, len, "uploaded", hex)
           } catch {
             // the reference skips files that vanish between listing
@@ -157,7 +172,19 @@ object WatchService {
     */
   def startAll(spark: SparkSession, dataDirs: Seq[String], targetUrl: String,
       trigger: Trigger, checkpoint: Option[String] = None,
-      sourceOptions: Map[String, String] = Map.empty): StreamingQuery = {
+      sourceOptions: Map[String, String] = Map.empty): StreamingQuery =
+    launch(spark, dataDirs, targetUrl, trigger, checkpoint, sourceOptions)(
+      uploadBatch(_, dataDirs, _, _))
+
+  /** The watch stream behind every daemon: the per-root arrival
+    * streams unioned, temp files dropped, checkpointed under the
+    * target unless `checkpoint` says otherwise, and `body` run on each
+    * micro-batch.
+    */
+  private def launch(spark: SparkSession, dataDirs: Seq[String], targetUrl: String,
+      trigger: Trigger, checkpoint: Option[String],
+      sourceOptions: Map[String, String])(
+      body: (DataFrame, Target, Long) => Unit): StreamingQuery = {
     require(dataDirs.nonEmpty, "at least one watch root required")
     val target = Target.parse(targetUrl)
     val arrivals = dataDirs.map(d => arrivalStream(spark, d, sourceOptions))
@@ -167,10 +194,16 @@ object WatchService {
       .option("checkpointLocation",
         checkpoint.getOrElse(target.watchCheckpointPath))
       .trigger(trigger)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        uploadBatch(b, dataDirs, target, id); ()
-      }
+      .foreachBatch((b: DataFrame, id: Long) => body(b, target, id))
       .start()
+  }
+
+  /** A bounded pass: the daemon started under AvailableNow, awaited,
+    * then stopped.
+    */
+  private def runBounded(start: Trigger => StreamingQuery): Unit = {
+    val q = start(Trigger.AvailableNow())
+    try q.awaitTermination() finally q.stop()
   }
 
   /** One bounded pass: process everything not yet uploaded, then
@@ -183,10 +216,8 @@ object WatchService {
 
   /** Bounded multi-root pass ([[startAll]] under AvailableNow). */
   def runOnceAll(spark: SparkSession, dataDirs: Seq[String], targetUrl: String,
-      checkpoint: Option[String] = None): Unit = {
-    val q = startAll(spark, dataDirs, targetUrl, Trigger.AvailableNow(), checkpoint)
-    try q.awaitTermination() finally q.stop()
-  }
+      checkpoint: Option[String] = None): Unit =
+    runBounded(startAll(spark, dataDirs, targetUrl, _, checkpoint))
 
   /** Read back the cumulative watch manifest (all batches). */
   def manifest(spark: SparkSession, targetUrl: String): DataFrame =
@@ -217,20 +248,10 @@ object WatchService {
       .select(col("path"), col("size_bytes"), col("md5").as("stored_md5"))
     val actual = stored.select(col("path")).as[String]
       .mapPartitions { it =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        val buf = new Array[Byte](64 * 1024)
+        val conf = new Configuration()
         it.map { rel =>
-          val p = new Path(objectsPath, rel)
-          try {
-            val fs = p.getFileSystem(conf)
-            val md = java.security.MessageDigest.getInstance("MD5")
-            val in = fs.open(p)
-            try {
-              var n = in.read(buf)
-              while (n >= 0) { md.update(buf, 0, n); n = in.read(buf) }
-            } finally in.close()
-            (rel, md.digest().map("%02x".format(_)).mkString)
-          } catch {
+          try (rel, streamFile(conf, new Path(objectsPath, rel), None, hash = true))
+          catch {
             case _: java.io.FileNotFoundException => (rel, null: String)
             // the filesystem's own transport checksum already proves
             // the bytes changed; the sentinel never matches an md5
@@ -326,24 +347,12 @@ object WatchService {
     // gate must see the digest BEFORE deciding whether to copy)
     val hashed = batch.select(col("path"), col("length")).as[(String, Long)]
       .mapPartitions { it =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        val buf = new Array[Byte](64 * 1024)
+        val conf = new Configuration()
         it.map { case (src, len) =>
           val srcPath = new Path(src)
-          val abs = srcPath.toUri.getPath
-          val rel = rootsAbs.collectFirst {
-            case r if abs.startsWith(r + "/") => abs.stripPrefix(r + "/")
-          }.getOrElse(abs.stripPrefix("/"))
-          try {
-            val fs = srcPath.getFileSystem(conf)
-            val md = java.security.MessageDigest.getInstance("MD5")
-            val in = fs.open(srcPath)
-            try {
-              var n = in.read(buf)
-              while (n >= 0) { md.update(buf, 0, n); n = in.read(buf) }
-            } finally in.close()
-            (src, rel, len, md.digest().map("%02x".format(_)).mkString)
-          } catch {
+          val rel = relativeKey(rootsAbs, srcPath.toUri.getPath)
+          try (src, rel, len, streamFile(conf, srcPath, None, hash = true))
+          catch {
             // ENOENT tolerance: vanished between listing and hashing
             case _: java.io.FileNotFoundException => (src, rel, len, null: String)
           }
@@ -388,22 +397,10 @@ object WatchService {
     verdicts.filter(col("verdict") === "accepted")
       .select(col("src"), col("path")).as[(String, String)]
       .foreachPartition { (it: Iterator[(String, String)]) =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        val buf = new Array[Byte](64 * 1024)
+        val conf = new Configuration()
         it.foreach { case (src, rel) =>
-          val s = new Path(src)
-          val d = new Path(objectsPath, rel)
-          try {
-            val sfs = s.getFileSystem(conf)
-            val in = sfs.open(s)
-            try {
-              val out = d.getFileSystem(conf).create(d, true)
-              try {
-                var n = in.read(buf)
-                while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-              } finally out.close()
-            } finally in.close()
-          } catch { case _: java.io.FileNotFoundException => () }
+          try streamFile(conf, new Path(src), Some(new Path(objectsPath, rel)), hash = false)
+          catch { case _: java.io.FileNotFoundException => () }
         }
       }
     // 5. verdict manifest + accepted digests into the index
@@ -420,30 +417,15 @@ object WatchService {
     */
   def startDedupGated(spark: SparkSession, dataDirs: Seq[String],
       targetUrl: String, trigger: Trigger, checkpoint: Option[String] = None,
-      sourceOptions: Map[String, String] = Map.empty): StreamingQuery = {
-    require(dataDirs.nonEmpty, "at least one watch root required")
-    val target = Target.parse(targetUrl)
-    val arrivals = dataDirs.map(d => arrivalStream(spark, d, sourceOptions))
-      .reduce(_ unionByName _)
-    durableArrivals(arrivals)
-      .writeStream
-      .option("checkpointLocation",
-        checkpoint.getOrElse(target.watchCheckpointPath))
-      .trigger(trigger)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        dedupGatedBatch(b, dataDirs, target, id)
-      }
-      .start()
-  }
+      sourceOptions: Map[String, String] = Map.empty): StreamingQuery =
+    launch(spark, dataDirs, targetUrl, trigger, checkpoint, sourceOptions)(
+      dedupGatedBatch(_, dataDirs, _, _))
 
   /** Bounded dedup-gated pass (AvailableNow; checkpointed resume). */
   def runOnceDedupGated(spark: SparkSession, dataDirs: Seq[String],
       targetUrl: String, checkpoint: Option[String] = None,
-      sourceOptions: Map[String, String] = Map.empty): Unit = {
-    val q = startDedupGated(spark, dataDirs, targetUrl,
-      Trigger.AvailableNow(), checkpoint, sourceOptions)
-    try q.awaitTermination() finally q.stop()
-  }
+      sourceOptions: Map[String, String] = Map.empty): Unit =
+    runBounded(startDedupGated(spark, dataDirs, targetUrl, _, checkpoint, sourceOptions))
 
   /** Cumulative dedup-gate verdict manifest (all batches). */
   def dedupManifest(spark: SparkSession, targetUrl: String): DataFrame =
@@ -468,46 +450,38 @@ object WatchService {
     * fsck oracle surfaces — one daemon pass per corpus per JVM).
     */
   def watchOracleTarget(spark: SparkSession, dir: String): String =
-    watched.computeIfAbsent(dir, d => {
-      val tree = graft.syncer.FsInventory.oracleTree(spark, d)
-      // per-process root: no cross-JVM clobbering, no hashCode collisions
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_watch_oracle_").toString
-      val url = s"directory://$root"
-      runOnce(spark, tree, url)
+    oracleRun(spark, dir, "graft_watch_oracle_")(runOnce(spark, _, _))
+
+  /** One bounded `pass` (fixture tree, target url) of the shared
+    * fixture tree, memoized per corpus per JVM. The target is a
+    * per-process root (no cross-JVM clobbering, no hashCode
+    * collisions), removed at exit.
+    */
+  private def oracleRun(spark: SparkSession, dir: String, prefix: String)(
+      pass: (String, String) => Unit): String =
+    watched.computeIfAbsent(prefix + dir, _ => {
+      val url = "directory://" +
+        graft.TmpDirs.cleanupOnExit(java.nio.file.Files.createTempDirectory(prefix))
+      pass(graft.syncer.FsInventory.oracleTree(spark, dir), url)
       url
     })
 
   def watchServiceQuery(spark: SparkSession, dir: String): DataFrame = {
     val targetUrl = watchOracleTarget(spark, dir)
-    val re = "ks1/([^/]+)/node(\\d+)/na-(\\d+)-Data\\.db$"
     manifest(spark, targetUrl)
       .filter(col("status") === "uploaded")
-      .select(
-        col("path"),
-        regexp_extract(col("path"), re, 1).as("cf"),
-        regexp_extract(col("path"), re, 2).cast("long").as("node_id"),
-        (regexp_extract(col("path"), re, 3).cast("long") % 7).as("shard_id"),
-        regexp_extract(col("path"), re, 3).cast("long").as("generation"),
-        col("size_bytes"))
+      .select(col("path") +: SsTablePath.parse(col("path")) :+ col("size_bytes"): _*)
+      .drop("is_temp")
       .orderBy(col("generation"))
   }
-
-  private val watchedDedup = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Memoized dedup-gated watch run over the shared fixture tree —
     * one bounded pass per corpus per JVM (its own target + checkpoint,
     * independent of the plain watch fixture).
     */
   def watchDedupTarget(spark: SparkSession, dir: String): String =
-    watchedDedup.computeIfAbsent(dir, d => {
-      val tree = graft.syncer.FsInventory.oracleTree(spark, d)
-      val root = graft.TmpDirs.cleanupOnExit(java.nio.file.Files
-        .createTempDirectory("graft_watch_dedup_")).toString
-      val url = s"directory://$root"
-      runOnceDedupGated(spark, Seq(tree), url)
-      url
-    })
+    oracleRun(spark, dir, "graft_watch_dedup_")(
+      (tree, url) => runOnceDedupGated(spark, Seq(tree), url))
 
   /** §2.1#307 `sync_watch_dedup` — the end-to-end composed pipeline:
     * the watch daemon's bounded pass with the dedup gate in front of
@@ -521,12 +495,11 @@ object WatchService {
     */
   def watchDedupQuery(spark: SparkSession, dir: String): DataFrame = {
     val targetUrl = watchDedupTarget(spark, dir)
-    val re = "ks1/([^/]+)/node(\\d+)/na-(\\d+)-Data\\.db$"
     dedupManifest(spark, targetUrl)
       .select(
         col("path"),
-        regexp_extract(col("path"), re, 1).as("cf"),
-        regexp_extract(col("path"), re, 3).cast("long").as("generation"),
+        SsTablePath.cf(col("path")).as("cf"),
+        SsTablePath.generation(col("path")).as("generation"),
         col("size_bytes"), col("verdict"), col("keeper_path"))
       .orderBy(col("path"))
   }

@@ -143,14 +143,18 @@ object BackupPipeline {
   /** Restore phase: the newest manifest at or before `asOf`, i.e. the
     * minimum file set that reconstructs that point in time.
     */
-  def restoreSet(spark: SparkSession, targetUrl: String, asOf: String): DataFrame = {
-    val m = manifests(spark, Target.parse(targetUrl))
-      .filter(col("manifest_date") <= lit(asOf).cast("date"))
-    val latest = m.agg(max(col("manifest_date")).as("manifest_date"))
-    m.join(broadcast(latest), Seq("manifest_date"))
+  def restoreSet(spark: SparkSession, targetUrl: String, asOf: String): DataFrame =
+    latestManifest(manifests(spark, Target.parse(targetUrl))
+        .filter(col("manifest_date") <= lit(asOf).cast("date")))
       .select(col("cf"), col("node_id"), col("shard_id"),
         col("generation"), col("path"), col("size_bytes"))
-  }
+
+  /** The rows of the newest manifest in `m`: a join on its one-row
+    * max date, broadcast.
+    */
+  private def latestManifest(m: DataFrame): DataFrame =
+    m.join(broadcast(m.agg(max(col("manifest_date")).as("manifest_date"))),
+      Seq("manifest_date"))
 
   /** §2.1#60 oracle surface: full backup to a directory target, then
     * the storage-side restore set as of 2024-01-15 — the reference's
@@ -160,11 +164,15 @@ object BackupPipeline {
     * SQL computes.
     */
   def backupPipelineQuery(spark: SparkSession, dir: String): DataFrame = {
-    val url = "directory:///tmp/graft_backup_oracle"
+    val url = backupOracleUrl(dir)
     backup(spark, dir, url)
     restoreSet(spark, url, "2024-01-15")
       .orderBy(col("cf"), col("node_id"), col("shard_id"))
   }
+
+  /** The per-JVM target of [[backupPipelineQuery]], removed at exit. */
+  private[graft] def backupOracleUrl(dir: String): String =
+    "directory://" + graft.TmpDirs.perJvmStoreRoot("graft_backup_oracle", dir)
 
   // ---- restore resume (the reference's restoremanifest.json) ----
   //
@@ -356,21 +364,24 @@ object BackupPipeline {
     * read back through the real ledger. The oracle recomputes the
     * same split analytically (row_number over path vs count/2).
     */
-  def syncRestoreResume(spark: SparkSession, dir: String): DataFrame = {
-    val url = resumeTargets.computeIfAbsent(dir, d => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_restore_resume_").toString
+  def syncRestoreResume(spark: SparkSession, dir: String): DataFrame =
+    restoreRemainder(spark, resumeOracleTarget(spark, dir), "2024-01-15")
+      .orderBy(col("cf"), col("node_id"), col("shard_id"))
+
+  /** The memoized fixture behind [[syncRestoreResume]]: a backup plus
+    * one half restore pass (into `restored/` under the same root),
+    * once per corpus per JVM. The root is removed at exit.
+    */
+  private[graft] def resumeOracleTarget(spark: SparkSession, dir: String): String =
+    resumeTargets.computeIfAbsent(dir, d => {
+      val root = graft.TmpDirs.cleanupOnExit(java.nio.file.Files
+        .createTempDirectory("graft_restore_resume_")).toString
       val u = s"directory://$root"
       backup(spark, d, u)
       val n = restoreSet(spark, u, "2024-01-15").count().toInt
-      val dest = java.nio.file.Files
-        .createTempDirectory("graft_restore_dest_").toString
-      runRestorePass(spark, u, "2024-01-15", dest, Some(n / 2))
+      runRestorePass(spark, u, "2024-01-15", s"$root/restored", Some(n / 2))
       u
     })
-    restoreRemainder(spark, url, "2024-01-15")
-      .orderBy(col("cf"), col("node_id"), col("shard_id"))
-  }
 
   /** Prune phase: objects older than the cutoff that the newest
     * manifest no longer references.
@@ -378,9 +389,7 @@ object BackupPipeline {
   def prunePlan(spark: SparkSession, targetUrl: String, cutoff: String): DataFrame = {
     val target = Target.parse(targetUrl)
     val objects = spark.read.parquet(target.objectsPath)
-    val m = manifests(spark, target)
-    val latest = m.join(broadcast(m.agg(max(col("manifest_date")).as("manifest_date"))),
-      Seq("manifest_date")).select(col("path"))
+    val latest = latestManifest(manifests(spark, target)).select(col("path"))
     objects
       .filter(col("snap_date") < lit(cutoff).cast("date"))
       .join(latest, Seq("path"), "left_anti")

@@ -40,27 +40,26 @@ import graft.sources.Tables
   */
 object FileInventory {
 
-  private def str(c: Column): Column = c.cast("string")
+  /** The model's origin node, temp flag and object key of an event —
+    * over the `events` table or its stream.
+    */
+  private[graft] def modelNodeId: Column = (col("user_id") % 10).cast("long")
+  private[graft] def modelIsTemp: Column = col("event_id") % 20 === 0
+  private[graft] def modelPath: Column =
+    SsTablePath.format(col("event_type"), modelNodeId, col("event_id"), modelIsTemp)
 
   /** The derivation itself — narrow, codegen'd, zero-shuffle. */
-  def inventory(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val nodeId = (col("user_id") % 10).cast("long")
-    val shardId = (col("event_id") % 7).cast("long")
-    val isTemp = col("event_id") % 20 === 0
-    ev.select(
+  def inventory(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir).select(
       col("event_type").as("cf"),
-      nodeId.as("node_id"),
-      shardId.as("shard_id"),
+      modelNodeId.as("node_id"),
+      SsTablePath.shardOf(col("event_id")).cast("long").as("shard_id"),
       col("event_id").as("generation"),
-      isTemp.as("is_temp"),
-      concat(lit("ks1/"), col("event_type"), lit("/node"), str(nodeId),
-        lit("/na-"), str(col("event_id")),
-        when(isTemp, lit("-tmp")).otherwise(lit("")), lit("-Data.db")).as("path"),
+      modelIsTemp.as("is_temp"),
+      modelPath.as("path"),
       floor(col("value") * 1000).cast("long").as("size_bytes"),
       col("ts").as("mtime"),
       to_date(col("ts")).as("snap_date"))
-  }
 
   /** Inventory with in-flight files excluded — the `isTempFile` rule
     * as a pushed-down filter.

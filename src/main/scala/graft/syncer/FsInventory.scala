@@ -79,8 +79,6 @@ object FsInventory {
     spark.createDataFrame(all, listingSchema)
   }
 
-  private val PathRe = "ks1/([^/]+)/node(\\d+)/na-(\\d+)(-tmp)?-Data\\.db$"
-
   /** The inventory relation (FileInventory schema) parsed from a real
     * tree laid out `<root>/ks1/<cf>/node<n>/na-<gen>[-tmp]-Data.db`,
     * with sizes and mtimes read from the filesystem. Files that don't
@@ -89,18 +87,13 @@ object FsInventory {
     */
   def inventory(spark: SparkSession, root: String): DataFrame =
     listFiles(spark, root)
-      .withColumn("rel", regexp_extract(col("path"), PathRe, 0))
+      .withColumn("rel", SsTablePath.keyOf(col("path")))
       .filter(col("rel") =!= "")
-      .select(
-        regexp_extract(col("rel"), PathRe, 1).as("cf"),
-        regexp_extract(col("rel"), PathRe, 2).cast("long").as("node_id"),
-        (regexp_extract(col("rel"), PathRe, 3).cast("long") % 7).as("shard_id"),
-        regexp_extract(col("rel"), PathRe, 3).cast("long").as("generation"),
-        (regexp_extract(col("rel"), PathRe, 4) === "-tmp").as("is_temp"),
+      .select(SsTablePath.parse(col("rel")) ++ Seq(
         col("rel").as("path"),
         col("size_bytes"),
         timestamp_millis(col("mtime_ms")).as("mtime"),
-        to_date(timestamp_millis(col("mtime_ms"))).as("snap_date"))
+        to_date(timestamp_millis(col("mtime_ms"))).as("snap_date")): _*)
 
   /** Durable (non-temp) view — `Watcher.isTempFile` as a filter. */
   def durable(spark: SparkSession, root: String): DataFrame =
@@ -124,8 +117,7 @@ object FsInventory {
     */
   def oracleTree(spark: SparkSession, dir: String): String =
     treeBuilt.computeIfAbsent(dir, d => {
-      val root = new Path(
-        "/tmp/graft_fsinv_oracle_" + Integer.toHexString(d.hashCode))
+      val root = new Path(graft.TmpDirs.perJvmStoreRoot("graft_fsinv_oracle", d))
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(root, true)
       val rows = FileInventory.inventory(spark, d)

@@ -1,7 +1,7 @@
 package graft.syncer
 
 import graft.Ckpt.CutOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,18 +34,30 @@ object SyncOps {
     * `extraCols` carries additional inventory columns (e.g.
     * `snap_date` for [[ioAgeTiering]]) through the window so every
     * consumer shares ONE live-set definition — the lineage key and
-    * the generation-desc tie-break live here and nowhere else.
+    * the generation-desc tie-break live in [[lineageHeads]] and
+    * nowhere else (the as-of restore, diff and delta call it too).
     */
-  def liveSetOf(durable: DataFrame, extraCols: Seq[String] = Nil): DataFrame = {
+  def liveSetOf(durable: DataFrame, extraCols: Seq[String] = Nil): DataFrame =
+    lineageHeads(durable, LiveCols ++ extraCols)
+      .orderBy(col("cf"), col("node_id"), col("shard_id"))
+
+  private val LiveCols = Seq("cf", "node_id", "shard_id", "generation", "path", "size_bytes")
+
+  /** [[liveSetOf]] without its output sort, projected to `cols`. */
+  private def lineageHeads(durable: DataFrame, cols: Seq[String]): DataFrame = {
     val w = Window.partitionBy(col("cf"), col("node_id"), col("shard_id"))
       .orderBy(col("generation").desc)
     durable
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
-      .select(Seq("cf", "node_id", "shard_id", "generation", "path", "size_bytes")
-        .++(extraCols).map(col): _*)
-      .orderBy(col("cf"), col("node_id"), col("shard_id"))
+      .select(cols.map(col): _*)
   }
+
+  /** The unsorted live set of the durable files that existed by `day`. */
+  private def liveAt(spark: SparkSession, dir: String, day: String,
+      cols: Seq[String]): DataFrame =
+    lineageHeads(FileInventory.durable(spark, dir)
+      .filter(col("snap_date") <= lit(day).cast("date")), cols)
 
   /** §2.1#3 — temp-file accounting per cf (reference:
     * `Watcher.isTempFile` exclusion). Pure partial aggregate.
@@ -83,17 +95,9 @@ object SyncOps {
     * only its files). Time-travel semantics: among durable files that
     * existed by the snapshot date, the max generation per lineage.
     */
-  def syncRestoreSet(spark: SparkSession, dir: String, asOf: String = "2024-01-15"): DataFrame = {
-    val w = Window.partitionBy(col("cf"), col("node_id"), col("shard_id"))
-      .orderBy(col("generation").desc)
-    FileInventory.durable(spark, dir)
-      .filter(col("snap_date") <= lit(asOf).cast("date"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("cf"), col("node_id"), col("shard_id"),
-        col("generation"), col("path"), col("size_bytes"))
+  def syncRestoreSet(spark: SparkSession, dir: String, asOf: String = "2024-01-15"): DataFrame =
+    liveAt(spark, dir, asOf, LiveCols)
       .orderBy(col("cf"), col("node_id"), col("shard_id"))
-  }
 
   /** §2.1#6 — prune plan (reference README: `fsck --older-than N`):
     * durable files older than the cutoff that the current live set
@@ -123,17 +127,9 @@ object SyncOps {
     */
   def syncManifestDiff(spark: SparkSession, dir: String,
       fromDay: String = "2024-01-10", toDay: String = "2024-01-20"): DataFrame = {
-    def liveAt(day: String): DataFrame = {
-      val w = Window.partitionBy(col("cf"), col("node_id"), col("shard_id"))
-        .orderBy(col("generation").desc)
-      FileInventory.durable(spark, dir)
-        .filter(col("snap_date") <= lit(day).cast("date"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("cf"), col("node_id"), col("shard_id"), col("generation"))
-    }
-    val newer = liveAt(toDay)
-    val older = liveAt(fromDay).withColumnRenamed("generation", "gen_old")
+    val lineage = Seq("cf", "node_id", "shard_id", "generation")
+    val newer = liveAt(spark, dir, toDay, lineage)
+    val older = liveAt(spark, dir, fromDay, lineage).withColumnRenamed("generation", "gen_old")
     newer.join(older, Seq("cf", "node_id", "shard_id"), "left_outer")
       .select(col("cf"), col("node_id"), col("shard_id"),
         col("gen_old"), col("generation").as("gen_new"),
@@ -151,12 +147,10 @@ object SyncOps {
   def syncPathParse(spark: SparkSession, dir: String): DataFrame =
     FileInventory.inventory(spark, dir)
       .select(col("cf"), col("node_id"), col("generation"), col("is_temp"), col("path"))
-      .withColumn("cf_parsed", regexp_extract(col("path"), "^ks1/([a-z]+)/", 1))
-      .withColumn("node_parsed",
-        regexp_extract(col("path"), "/node([0-9]+)/", 1).cast("long"))
-      .withColumn("gen_parsed",
-        regexp_extract(col("path"), "/na-([0-9]+)", 1).cast("long"))
-      .withColumn("temp_parsed", col("path").contains("-tmp-"))
+      .withColumn("cf_parsed", SsTablePath.cf(col("path")))
+      .withColumn("node_parsed", SsTablePath.nodeId(col("path")))
+      .withColumn("gen_parsed", SsTablePath.generation(col("path")))
+      .withColumn("temp_parsed", SsTablePath.isTemp(col("path")))
       .groupBy(col("cf"))
       .agg(count(lit(1)).as("n_paths"),
         sum(when(col("cf_parsed") === col("cf") &&
@@ -297,9 +291,18 @@ object SyncOps {
   def syncBandwidthWindows(spark: SparkSession, dir: String,
       capBytes: Long = 16777216L): DataFrame = {
     // freeze the backlog once (thin metadata frame): both the span
-    // pushdown below and the banded pass read the same blocks instead
-    // of recomputing the diff-upload anti-join twice
-    val backlog = syncDiffUpload(spark, dir).cutLineage(eager = true)
+    // pushdown and the banded pass of transferWindows read the same
+    // blocks instead of recomputing the diff-upload anti-join twice
+    transferWindows(syncDiffUpload(spark, dir).cutLineage(eager = true),
+      Seq(col("generation")), capBytes)
+  }
+
+  /** The ≤`capBytes` transfer windows of a frozen `backlog`, cut by
+    * running-total bytes in `order` — the banded prefix sum both
+    * bandwidth twins share.
+    */
+  private def transferWindows(backlog: DataFrame, order: Seq[Column],
+      capBytes: Long): DataFrame = {
     // bounded pushdown parameter: the generation span (one metadata row)
     val span = backlog.agg(min(col("generation")), max(col("generation"))).collect()(0)
     val (lo, width) =
@@ -308,7 +311,7 @@ object SyncOps {
         math.max(1L, (span.getLong(1) - span.getLong(0)) / 4096L + 1L))
     graft.analytics.Ranks.globalRankCumSum(backlog,
         expr(s"CAST((generation - $lo) div $width AS BIGINT)"),
-        Seq(col("generation")), col("size_bytes"), "__rank", "cum")
+        order, col("size_bytes"), "__rank", "cum")
       .withColumn("window_idx", expr(s"CAST((cum - 1) div $capBytes AS BIGINT)"))
       .groupBy(col("window_idx"))
       .agg(count(lit(1)).as("n_files"),
@@ -331,24 +334,9 @@ object SyncOps {
     * single-task global sort at any backlog size).
     */
   def syncRestoreBandwidth(spark: SparkSession, dir: String,
-      capBytes: Long = 16777216L, asOf: String = "2024-01-15"): DataFrame = {
-    val backlog = syncRestoreSet(spark, dir, asOf).cutLineage(eager = true)
-    val span = backlog.agg(min(col("generation")), max(col("generation"))).collect()(0)
-    val (lo, width) =
-      if (span.isNullAt(0)) (0L, 1L)
-      else (span.getLong(0),
-        math.max(1L, (span.getLong(1) - span.getLong(0)) / 4096L + 1L))
-    graft.analytics.Ranks.globalRankCumSum(backlog,
-        expr(s"CAST((generation - $lo) div $width AS BIGINT)"),
-        Seq(col("generation"), col("path")), col("size_bytes"), "__rank", "cum")
-      .withColumn("window_idx", expr(s"CAST((cum - 1) div $capBytes AS BIGINT)"))
-      .groupBy(col("window_idx"))
-      .agg(count(lit(1)).as("n_files"),
-        sum(col("size_bytes")).as("window_bytes"),
-        min(col("generation")).as("first_gen"),
-        max(col("generation")).as("last_gen"))
-      .orderBy(col("window_idx"))
-  }
+      capBytes: Long = 16777216L, asOf: String = "2024-01-15"): DataFrame =
+    transferWindows(syncRestoreSet(spark, dir, asOf).cutLineage(eager = true),
+      Seq(col("generation"), col("path")), capBytes)
 
   /** §2.1#105 — replication-factor audit: on how many nodes each
     * (cf, shard) lineage is materialized — the "is every shard
@@ -372,18 +360,8 @@ object SyncOps {
     */
   def syncRestoreDelta(spark: SparkSession, dir: String,
       fromDay: String = "2024-01-10", toDay: String = "2024-01-20"): DataFrame = {
-    def liveAt(day: String): DataFrame = {
-      val w = Window.partitionBy(col("cf"), col("node_id"), col("shard_id"))
-        .orderBy(col("generation").desc)
-      FileInventory.durable(spark, dir)
-        .filter(col("snap_date") <= lit(day).cast("date"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("cf"), col("node_id"), col("shard_id"),
-          col("generation"), col("path"), col("size_bytes"))
-    }
-    val newer = liveAt(toDay)
-    val older = liveAt(fromDay)
+    val newer = liveAt(spark, dir, toDay, LiveCols)
+    val older = liveAt(spark, dir, fromDay, LiveCols)
       .select(col("cf"), col("node_id"), col("shard_id"), col("generation").as("gen_old"))
     newer.join(older, Seq("cf", "node_id", "shard_id"), "left_outer")
       .filter(col("gen_old").isNull || col("generation") > col("gen_old"))
@@ -657,6 +635,38 @@ object SyncOps {
   private val RingNodes = 8
   private val RingVnodes = 16
 
+  /** The `nodes`-node ring: (node, token) for its 16 vnodes each. */
+  private def ringOf(spark: SparkSession, nodes: Int): DataFrame = {
+    import spark.implicits._
+    (0 until nodes).flatMap(n => (0 until RingVnodes).map(v =>
+      (n.toLong, ((n * RingVnodes + v) * 2654435761L) % RingM)))
+      .toDF("node", "token")
+  }
+
+  /** A key's ring token. */
+  private def tokenOf(key: Column): Column = (key * 1103515245L) % RingM
+
+  /** Per-user event counts with each user's ring token `kt`. */
+  private def userKeys(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.Tables.events(spark, dir)
+      .groupBy(col("user_id")).agg(count(lit(1)).as("n_events"))
+      .withColumn("kt", tokenOf(col("user_id")))
+
+  /** RF=3 replica placement on the `nodes`-node ring: per key (the
+    * first of `keyCols`, token `kt`), the three distinct nodes whose
+    * nearest vnode lies closest clockwise, ranked `rk` 1..3 by that
+    * distance `mind`, then node.
+    */
+  private def replicas(keys: DataFrame, keyCols: Seq[String],
+      nodes: Int = RingNodes): DataFrame = {
+    val perNode = keys.crossJoin(broadcast(ringOf(keys.sparkSession, nodes)))
+      .withColumn("dist", (col("token") - col("kt") + RingM) % RingM)
+      .groupBy((keyCols :+ "node").map(col): _*)
+      .agg(min(col("dist")).as("mind"))
+    val w = Window.partitionBy(col(keyCols.head)).orderBy(col("mind"), col("node"))
+    perNode.withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
+  }
+
   /** §2.1 `sync_token_ring` — consistent-hash ring placement, the
     * partition-ownership model of the reference's upstream store
     * (`/root/reference/bin/cassandra-syncer` ships SSTables whose
@@ -675,20 +685,12 @@ object SyncOps {
     * node moves keys ONLY onto the new node, never between old ones.
     */
   def tokenRingPlacement(spark: SparkSession, dir: String,
-      nodes: Int = RingNodes): DataFrame = {
-    import spark.implicits._
-    val ring = (0 until nodes).flatMap(n => (0 until RingVnodes).map(v =>
-      (n.toLong, ((n * RingVnodes + v) * 2654435761L) % RingM)))
-      .toDF("node", "token")
-    val keys = graft.sources.Tables.events(spark, dir)
-      .groupBy(col("user_id")).agg(count(lit(1)).as("n_events"))
-      .withColumn("kt", (col("user_id") * 1103515245L) % RingM)
-    keys.crossJoin(broadcast(ring))
+      nodes: Int = RingNodes): DataFrame =
+    userKeys(spark, dir).crossJoin(broadcast(ringOf(spark, nodes)))
       .withColumn("dist", (col("token") - col("kt") + RingM) % RingM)
       .groupBy(col("user_id"), col("n_events"))
       .agg(min(struct(col("dist"), col("node"))).as("m"))
       .select(col("m.node").as("node"), col("user_id"), col("n_events"))
-  }
 
   def syncTokenRing(spark: SparkSession, dir: String): DataFrame =
     tokenRingPlacement(spark, dir)
@@ -706,29 +708,14 @@ object SyncOps {
     * Everything after the one fact-table aggregation happens on
     * |keys|×|nodes| rows with a broadcast 128-row ring.
     */
-  def syncReplicaSets(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ring = (0 until RingNodes).flatMap(n => (0 until RingVnodes).map(v =>
-      (n.toLong, ((n * RingVnodes + v) * 2654435761L) % RingM)))
-      .toDF("node", "token")
-    val keys = graft.sources.Tables.events(spark, dir)
-      .groupBy(col("user_id")).agg(count(lit(1)).as("n_events"))
-      .withColumn("kt", (col("user_id") * 1103515245L) % RingM)
-    val perNode = keys.crossJoin(broadcast(ring))
-      .withColumn("dist", (col("token") - col("kt") + RingM) % RingM)
-      .groupBy(col("user_id"), col("n_events"), col("node"))
-      .agg(min(col("dist")).as("mind"))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("mind"), col("node"))
-    perNode.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
+  def syncReplicaSets(spark: SparkSession, dir: String): DataFrame =
+    replicas(userKeys(spark, dir), Seq("user_id", "n_events"))
       .groupBy(col("node"))
       .agg(sum(when(col("rk") === 1, 1L).otherwise(0L)).as("n_primary"),
         count(lit(1)).as("n_replica"),
         sum(when(col("rk") === 1, col("n_events")).otherwise(0L))
           .as("primary_events"))
       .orderBy(col("node"))
-  }
 
   /** §2.1 `sync_ring_rebalance` — node-addition movement plan: the
     * RF=3 placement ([[syncReplicaSets]]) recomputed with a ninth
@@ -742,26 +729,13 @@ object SyncOps {
     * anti-join diff per direction — all metadata-scale.
     */
   def syncRingRebalance(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    def ringOf(nodes: Int): DataFrame =
-      (0 until nodes).flatMap(n => (0 until RingVnodes).map(v =>
-        (n.toLong, ((n * RingVnodes + v) * 2654435761L) % RingM)))
-        .toDF("node", "token")
     val keys = graft.sources.Tables.events(spark, dir)
       .select(col("user_id")).distinct()
-      .withColumn("kt", (col("user_id") * 1103515245L) % RingM)
-    def placement(ring: DataFrame): DataFrame = {
-      val perNode = keys.crossJoin(broadcast(ring))
-        .withColumn("dist", (col("token") - col("kt") + RingM) % RingM)
-        .groupBy(col("user_id"), col("node"))
-        .agg(min(col("dist")).as("mind"))
-      val w = Window.partitionBy(col("user_id")).orderBy(col("mind"), col("node"))
-      perNode.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
-        .select(col("user_id"), col("node"))
-    }
-    val before = placement(ringOf(RingNodes)).cutLineage()
-    val after = placement(ringOf(RingNodes + 1)).cutLineage()
+      .withColumn("kt", tokenOf(col("user_id")))
+    def placement(nodes: Int): DataFrame =
+      replicas(keys, Seq("user_id"), nodes).select(col("user_id"), col("node"))
+    val before = placement(RingNodes).cutLineage()
+    val after = placement(RingNodes + 1).cutLineage()
     val gained = after.join(before, Seq("user_id", "node"), "left_anti")
       .groupBy(col("node")).agg(count(lit(1)).as("keys_gained"))
     val lost = before.join(after, Seq("user_id", "node"), "left_anti")
@@ -792,22 +766,12 @@ object SyncOps {
     * and the ring/replica side is broadcast metadata throughout.
     */
   def cassReadRepair(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ring = (0 until RingNodes).flatMap(n => (0 until RingVnodes).map(v =>
-      (n.toLong, ((n * RingVnodes + v) * 2654435761L) % RingM)))
-      .toDF("node", "token")
     val cells = graft.sources.Tables.events(spark, dir).select(
       (col("user_id") % 50).cast("long").as("row_key"),
       col("ts").as("write_ts"), col("event_id").as("generation"))
     val keys = cells.select(col("row_key")).distinct()
-      .withColumn("kt", (col("row_key") * 1103515245L) % RingM)
-    val perNode = keys.crossJoin(broadcast(ring))
-      .withColumn("dist", (col("token") - col("kt") + RingM) % RingM)
-      .groupBy(col("row_key"), col("node"))
-      .agg(min(col("dist")).as("mind"))
-    val wRk = Window.partitionBy(col("row_key")).orderBy(col("mind"), col("node"))
-    val replicas = perNode.withColumn("rk", row_number().over(wRk))
-      .filter(col("rk") <= 3)
+      .withColumn("kt", tokenOf(col("row_key")))
+    val replicaSet = replicas(keys, Seq("row_key"))
       .select(col("row_key"), col("rk"), col("node"))
     // per-replica applied set → per-replica LWW head (one window on
     // the (row_key, rk) shuffle; the replicas dim broadcasts)
@@ -817,7 +781,7 @@ object SyncOps {
     // window above already partitioned it on row_key; no hint, so at
     // scale this degrades to a co-partitioned shuffle instead of
     // broadcasting a key-scale frame)
-    val heads = cells.join(replicas, Seq("row_key"))
+    val heads = cells.join(replicaSet, Seq("row_key"))
       .filter((col("generation") + col("rk")) % 5 =!= 0)
       .withColumn("rn", row_number().over(wLww))
       .filter(col("rn") === 1)
@@ -838,7 +802,7 @@ object SyncOps {
     // heads/winner are |keys|·RF-scale — key-keyed shuffle joins, no
     // broadcast hints (AQE reads the checkpointed sizes at runtime and
     // still broadcasts while they are actually small)
-    replicas
+    replicaSet
       .join(heads, Seq("row_key", "rk"), "left")
       .join(winner, Seq("row_key"))
       .withColumn("stale",
@@ -859,22 +823,8 @@ object SyncOps {
     * the ≤3 replica rows per key.
     */
   def syncHintedHandoff(spark: SparkSession, dir: String,
-      downNode: Long = 3L): DataFrame = {
-    import spark.implicits._
-    val ring = (0 until RingNodes).flatMap(n => (0 until RingVnodes).map(v =>
-      (n.toLong, ((n * RingVnodes + v) * 2654435761L) % RingM)))
-      .toDF("node", "token")
-    val keys = graft.sources.Tables.events(spark, dir)
-      .groupBy(col("user_id")).agg(count(lit(1)).as("n_events"))
-      .withColumn("kt", (col("user_id") * 1103515245L) % RingM)
-    val perNode = keys.crossJoin(broadcast(ring))
-      .withColumn("dist", (col("token") - col("kt") + RingM) % RingM)
-      .groupBy(col("user_id"), col("n_events"), col("node"))
-      .agg(min(col("dist")).as("mind"))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("mind"), col("node"))
-    perNode.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
+      downNode: Long = 3L): DataFrame =
+    replicas(userKeys(spark, dir), Seq("user_id", "n_events"))
       .groupBy(col("user_id"), col("n_events"))
       .agg(max(when(col("node") === downNode, 1L).otherwise(0L)).as("affected"),
         min(when(col("node") =!= downNode, struct(col("rk"), col("node"))))
@@ -883,7 +833,6 @@ object SyncOps {
       .groupBy(col("live.node").as("node"))
       .agg(count(lit(1)).as("n_hints"), sum(col("n_events")).as("hinted_events"))
       .orderBy(col("node"))
-  }
 
   /** §2.1#272 — backlog age per column family: among durable files
     * the target is still missing ([[diffUploadOf]]'s anti-join

@@ -119,4 +119,25 @@ class AnnSpec extends GraftSpec {
       .select(col("label")).distinct().count()
     assert(r.length <= labels)
   }
+
+  test("dedup_semantic's pin leaves later vec_* broadcast sides on the testdata scan") {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    CachePins.scoped {
+      Ann.dedupSemantic(spark, sf)
+      val plan = Ann.vecCosineHist(spark, sf).queryExecution.optimizedPlan
+      val sides = plan.collect { case j: Join =>
+        Seq(j.hint.leftHint -> j.left, j.hint.rightHint -> j.right).collect {
+          case (h, side) if h.exists(_.strategy.contains(BROADCAST)) => side
+        }
+      }.flatten
+      assert(sides.nonEmpty, plan.treeString)
+      sides.foreach { side =>
+        val leaves = side.collectLeaves()
+        assert(leaves.exists(_.isInstanceOf[LogicalRelation]), side.treeString)
+        assert(!leaves.exists(_.isInstanceOf[InMemoryRelation]), side.treeString)
+      }
+    }
+  }
 }

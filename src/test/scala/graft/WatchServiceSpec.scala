@@ -188,4 +188,36 @@ class WatchServiceSpec extends GraftSpec {
     WatchService.runOnceDedupGated(spark, Seq(data), url)
     assert(WatchService.dedupManifest(spark, url).count() === 4)
   }
+
+  test("plain and dedup-gated passes upload the same durable set, byte for byte") {
+    val (data, plainUrl) = freshDirs("twin")
+    val gatedUrl = "directory://" + Files.createTempDirectory("graft_watch_twin_gated_tgt")
+    val rng = new scala.util.Random(11)
+    // unique contents, each longer than one 64 KiB read
+    val rels = Seq("ks1/click/node1/na-50-Data.db", "ks1/click/node2/na-51-Data.db",
+      "ks1/view/node1/na-52-Data.db", "ks2/error/node0/na-53-Data.db")
+    rels.zipWithIndex.foreach { case (rel, i) =>
+      val p = Paths.get(data, rel)
+      Files.createDirectories(p.getParent)
+      Files.write(p, Array.fill[Byte](70000 + i)(rng.nextInt(256).toByte))
+    }
+    mkFile(data, "ks1/view/node1/na-54-tmp-Data.db", 10) // in-flight: both skip it
+    WatchService.runOnce(spark, data, plainUrl)
+    WatchService.runOnceDedupGated(spark, Seq(data), gatedUrl)
+    val plain = WatchService.manifest(spark, plainUrl)
+      .filter(col("status") === "uploaded").select(col("path"), col("md5")).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val gated = WatchService.dedupManifest(spark, gatedUrl)
+      .filter(col("verdict") === "accepted").select(col("path"), col("digest")).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(plain.keySet === rels.toSet)
+    assert(gated === plain) // same paths, and the gate's digest is the upload's md5
+    rels.foreach { rel =>
+      val src = Files.readAllBytes(Paths.get(data, rel))
+      Seq(plainUrl, gatedUrl).foreach { url =>
+        val obj = Files.readAllBytes(Paths.get(Target.parse(url).objectsPath, rel))
+        assert(obj.sameElements(src), s"$url: $rel")
+      }
+    }
+  }
 }
